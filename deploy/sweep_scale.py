@@ -14,8 +14,7 @@ is ratio > 3 for a k=2 step, with a floor on the scaled-side time so the
 +-25% single-run noise on sub-second queries (dominated by Spark's fixed
 ~0.3-0.5 s/job latency) cannot fire it.
 
-Noise defense (r10 verdict item 2 — ported from bench.py, which proved it
-in the graded artifact): (a) the sweep REFUSES to start on a loaded host,
+Noise defense (r10 verdict item 2): (a) the sweep REFUSES to start on a loaded host,
 resting in bounded steps until the 1-minute load average settles; (b) any
 pair whose single-run ratio crosses --confirm-ratio is immediately
 re-measured min-of-N (default 3) IN-LINE, and then AGAIN in a FRESH
@@ -80,27 +79,13 @@ from similarity_analysis_big_data_spark.session import get_session  # noqa: E402
 # (not growth): they still appear in the artifact with their numbers, but
 # are reported under `explained` instead of `flagged` so a round's "new
 # flags" signal stays clean. Add a name here ONLY with a SCALE.md entry
-# that carries an 8x (or better) point proving convergence. Entries in
-# DISJOINT_ONLY apply only under --mode disjoint: they document replica
-# artifacts of linear vocabulary growth, which the shared-vocab default
-# does not construct (r10 verdict item 3 — the title entry retires from
-# the default sweep rather than being explained away).
+# that carries an 8x (or better) point proving convergence.
 EXPLAINED: dict[str, str] = {
     "fuzzy_levenshtein_pairs": "capped-block pair count saturates (~31k); "
     "2x ratio is the one-time saturation step — 8x/2x measured x1.26",
     "approx_distinct_parts": "mixed exact+HLL agg partial-buffer threshold; "
     "2x->8x measured x1.7 for 4x data (sub-linear continuation)",
-    "title_retrieval_accuracy": "[disjoint mode only] dense-strategy pair "
-    "stage under the disjoint replica: per-copy vocabularies are disjoint, "
-    "so vocab grows with k (31*k <= 256 until k=16) and the broadcast-matmul "
-    "cells grow ~k^2 — a replica artifact, not corpus growth (real corpora "
-    "add documents, not proportional vocabulary; the plan flips to sparse at "
-    "the vocab-496 point, SCALE.md r7). Min-of-3: 1x/2x/8x = 3.15/4.58/26.96 "
-    "s (2x ratio 1.45; the >3 single-run sweep readings were the stall-prone "
-    "host floor). The shared-vocab default mode does not construct this "
-    "growth shape.",
 }
-DISJOINT_ONLY: frozenset[str] = frozenset({"title_retrieval_accuracy"})
 
 # Cross-document TEXT-similarity workloads: measured against the DISJOINT
 # replica (cross-copy dissimilarity is their honest growth shape — see
@@ -149,7 +134,9 @@ DEDUP_TEXT_FAMILY: frozenset[str] = frozenset(
 
 
 def _rest_until_quiet(threshold: float, cap_sec: float, step_sec: float) -> dict:
-    """Pre-JVM load gate, same contract as bench.py's (which see)."""
+    """Pre-JVM load gate: sleep in ``step_sec`` steps, at most ``cap_sec``
+    in total, until the 1-minute load average is <= ``threshold``; the
+    returned dict records the loads and the wait."""
     waited = 0.0
     initial = os.getloadavg()[0]
     load = initial
@@ -236,7 +223,7 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
 
     # Fresh-process confirmation child (r11 verdict item 3): the in-line
     # min-of-N re-measure runs in the same long-lived warmed session, and
@@ -326,8 +313,7 @@ def main() -> None:
             return disjoint_dir, "disjoint"
         return shared_dir, "shared"
 
-    # Rest gate BEFORE the JVM starts (bench.py's defense, same env knobs;
-    # like there, the gate must never fail the sweep).
+    # Rest gate BEFORE the JVM starts; the gate must never fail the sweep.
     try:
         rest = _rest_until_quiet(
             threshold=float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_THRESHOLD", "4.0")),
@@ -349,13 +335,6 @@ def main() -> None:
     only = [s.strip() for s in (args.only or "").split(",") if s.strip()]
     all_names = sorted(registry.query_map())
     names = [n for n in all_names if not only or any(s in n for s in only)]
-
-    def explained_note(name: str, replica_mode: str) -> str | None:
-        # DISJOINT_ONLY entries document linear-vocabulary artifacts; they
-        # only apply when the query actually ran on the disjoint replica
-        if name in DISJOINT_ONLY and replica_mode != "disjoint":
-            return None
-        return EXPLAINED.get(name)
 
     results: dict[str, dict] = {}
     flagged: list[str] = []
@@ -417,7 +396,7 @@ def main() -> None:
         row: dict = {}
         base_runs, scaled_runs = [t_base], [t_scaled]
         ratio = round(t_scaled / t_base, 2) if t_base > 0 else float("inf")
-        # Confirmation re-measure (bench.py's min-of-N, applied adaptively):
+        # Confirmation re-measure (min-of-N, applied adaptively):
         # a suspicious single-run pair gets (confirm_runs - 1) more runs per
         # side BEFORE anything is published, so a flag in the artifact is
         # already min-of-N-confirmed and noise never needs an addendum.
@@ -509,7 +488,7 @@ def main() -> None:
         results[name] = row
         over = ratio > args.flag_ratio and t_scaled >= args.min_seconds
         tag = ""
-        note = explained_note(name, replica_mode)
+        note = EXPLAINED.get(name)
         if over and note is not None:
             explained.append(name)
             tag = " EXPLAINED"

@@ -93,13 +93,20 @@ def word_ngrams(tokens: Column | str, n: int) -> Column:
 
 def with_word_ngrams(df, tokens, n: int, out_col: str):
     """``word_ngrams`` as a DataFrame step via ``pyspark.ml.feature.NGram``
-    — exact row parity with the Column form (space-joined grams in
-    position order, empty array below n tokens, null arrays normalized to
-    empty), but the sliding window runs as one compiled Scala UDF instead
-    of an interpreted transform/slice/array_join lambda per position
-    (guide §1.2 per-task work; measured 6x on the sf0.1 corpus, parity
-    diff 0 rows). ``tokens`` may be a column name or Column expression;
-    the result appends ``out_col``.
+    — exact row parity with the Column form on NULL-FREE token arrays
+    (space-joined grams in position order, empty array below n tokens,
+    null arrays normalized to empty), but the sliding window runs as one
+    compiled Scala UDF instead of an interpreted transform/slice/array_join
+    lambda per position (guide §1.2 per-task work; measured 6x on the sf0.1
+    corpus, parity diff 0 rows). ``tokens`` may be a column name or Column
+    expression; the result appends ``out_col``.
+
+    Null ELEMENTS render differently: ``array_join`` skips them while
+    NGram prints ``'null'``. ``tokenize`` never emits null elements
+    (pinned by a test), so every tokenize-fed call site is exact; a caller
+    with other arrays must drop null elements first. No per-element filter
+    here: it would bring back the interpreted higher-order function this
+    path exists to avoid.
     """
     from pyspark.ml.feature import NGram
 

@@ -157,184 +157,21 @@ def pivot_matrix(
     return p.agg(F.first(value_col))
 
 
-# Cost-based strategy bounds for dense_best_match (see docstring): the
-# broadcast title matrix must stay small, and a dense matmul only beats the
-# sparse join when the vocabulary is narrow enough that every pair overlaps.
-DENSE_MAX_VOCAB = 256
-DENSE_MAX_BROADCAST_CELLS = 4_000_000  # n_titles x |title vocab| doubles (~32 MB)
-# Per-task transient ceiling for the score block: the matmul result is
-# (candidate_rows x |Q|) doubles, and |Q| grows with the corpus while Spark
-# sizes partitions by INPUT bytes — the input-side sizing cannot see the
-# x|Q| expansion, so without a row cap one 64 MB input partition can expand
-# to a multi-GB score allocation (measured at the 16x shared replica,
-# |Q|=16k: a single-task R of 80k x 16k = 10.3 GB doubles + the round()
-# copy read 258-393 s; blocked at 16M cells the same point reads ~11 s).
-# 16M cells = 128 MB per R (and per rounded copy), invariant of corpus
-# size and partition sizing. SIZED BY MEASUREMENT (r12, interleaved
-# min-of-3 at the 16x point): 4M/16M/64M cells = 11.9/10.7/284 s — the
-# 64M variant's 512 MB blocks already re-enter the allocation wall, so
-# the ceiling is load-bearing in both directions.
+# Broadcast bound for dense_topk_neighbors' query matrix: the ANN callers
+# in plans/ann.py take the dense path only when |Q| x d doubles fit (~32 MB).
+DENSE_MAX_BROADCAST_CELLS = 4_000_000
+# Per-task transient ceiling for dense_topk_neighbors' score block: the
+# matmul result is (corpus_rows x |Q|) doubles, and |Q| grows with the
+# corpus while Spark sizes partitions by INPUT bytes — the input-side
+# sizing cannot see the x|Q| expansion, so without a row cap one 64 MB
+# input partition can expand to a multi-GB score allocation. 16M cells =
+# 128 MB per score block (and per rounded copy), invariant of corpus size
+# and partition sizing. SIZED BY MEASUREMENT (r12, interleaved min-of-3 on
+# a blocked matmul arg-max at a 16x replica, |Q|=16k): unblocked 258-393 s;
+# 4M/16M/64M cells = 11.9/10.7/284 s — the 64M variant's 512 MB blocks
+# already re-enter the allocation wall, so the ceiling is load-bearing in
+# both directions.
 DENSE_BLOCK_CELLS = 16_000_000
-
-
-def dense_best_match(
-    title_vec: DataFrame,
-    abstract_vec: DataFrame,
-    query_id: str,
-    match_id: str,
-    round_to: int = 9,
-    t_rows: list | None = None,
-) -> DataFrame:
-    """Exact arg-max cosine via blocked dense matmul — the small-vocabulary
-    physical strategy for ``sparse_cosine_join`` + ``best_match``.
-
-    When the vocabulary is narrow (synthetic corpora, categorical token
-    spaces), EVERY query/candidate pair shares terms, so the sparse join
-    degenerates to the full |Q|x|A| pair materialization — tens of millions
-    of shuffled rows whose only purpose is to be argmax'd away. This
-    operator never materializes pairs: the (|Q| x V) query matrix is
-    broadcast into each task, each candidate partition computes its local
-    score block with one BLAS matmul, reduces it to ONE candidate row per
-    query (partition-local arg-max, same round-then-tiebreak rule), and a
-    final tiny window merges the per-partition winners.
-
-    Exactness contract (same as the sparse path): scores round to
-    ``round_to`` BEFORE comparison; ties break on ascending ``match_id``
-    (np.argmax over id-sorted rows returns the first maximum); candidates
-    sharing no term with a query have RAW dot exactly 0.0 and are masked
-    out before the argmax (non-negative weights make dot == 0 equivalent
-    to no shared term), while term-sharing candidates whose cosine merely
-    ROUNDS to 0.0 stay in play — exactly the sparse join's candidate set.
-
-    Scale: candidates stay distributed (one hash shuffle on ``match_id``
-    to co-locate each candidate's terms); the broadcast side is bounded by
-    the caller (`DENSE_MAX_BROADCAST_CELLS`). Shuffled bytes are O(|A| x V)
-    — the weighted relation itself — vs the sparse join's O(|Q| x |A|)
-    pair rows. Per-task transient memory is bounded too (r12): the score
-    block materializes (rows x |Q|) doubles and |Q| grows with the corpus,
-    which input-byte partition sizing cannot see — so the matmul walks
-    candidate rows in `DENSE_BLOCK_CELLS`-bounded chunks (128 MB per score
-    block at any corpus size; measured 258 s -> 20 s at the 16x shared
-    replica, and 10.9 -> 7.4 s at 8x from cache locality alone).
-
-    The explicit ``repartition`` below is the CONTRACT, not a cost: the
-    block matmul needs every candidate's terms co-located, and this
-    operator must not assume anything about its caller's partitioning.
-    When the input already ends in a window partitioned on the same id
-    (the flagship caller does), Catalyst collapses the repartition to a
-    no-op — measured r11: the matmul sees the identical partitioning
-    with or without it (a one-row-per-partition probe read 1 partition
-    both ways at sf0.1). Matmul PARALLELISM is therefore AQE's
-    data-volume partition sizing: a megabytes-scale fixture runs one
-    task (correct — the work is tiny), and the partition count grows
-    with the weighted relation, which is the right 100 TB posture. (An
-    r11 2x-replica sweep reading of x5.94 was initially attributed to
-    removing this repartition; the partition probe disproved that — the
-    reading was the documented bimodal-JVM host artifact, same class as
-    r10's 74.5 s audio base. Fresh-process min-of-3 reads x0.98-1.4 at
-    2x with either plan shape.)
-    """
-    import numpy as np
-    import pandas as pd
-
-    if t_rows is None:
-        # bounded by the caller's strategy check; callers that already
-        # collected the matrix inside their probe action pass t_rows
-        t_rows = title_vec.collect()
-    terms = sorted({r["term"] for r in t_rows})
-    # Guard on the ACTUAL collected matrix, not the caller's (possibly
-    # memoized) verdict: a memo revalidated on row count alone cannot see
-    # a same-count rewrite with a wider vocabulary (ADVICE r11), and a
-    # caller forcing strategy="dense" may never have probed at all. The
-    # fallback is exact — both formulations share the round-before-argmax
-    # / ascending-id contract and the shared-term candidate set — so an
-    # over-bound matrix degrades to the sparse join instead of silently
-    # over-broadcasting (the collect already happened; the broadcast is
-    # the part being protected).
-    n_queries = len({r[query_id] for r in t_rows})
-    if len(terms) > DENSE_MAX_VOCAB or n_queries * len(terms) > DENSE_MAX_BROADCAST_CELLS:
-        pairs = sparse_cosine_join(
-            title_vec,
-            abstract_vec,
-            query_id,
-            match_id,
-            round_to=round_to,
-            spread_left=True,
-        )
-        return best_match(pairs, query_id, match_id)
-    t_idx = {t: i for i, t in enumerate(terms)}
-    q_ids = sorted({r[query_id] for r in t_rows})
-    q_pos = {q: i for i, q in enumerate(q_ids)}
-    T = np.zeros((len(q_ids), len(terms)), dtype=np.float64)
-    for r in t_rows:
-        T[q_pos[r[query_id]], t_idx[r["term"]]] = r["weight"]
-
-    out_schema = f"{query_id} long, {match_id} long, cosine double"
-    # computed driver-side so the closure ships a plain int (and tests can
-    # monkeypatch DENSE_BLOCK_CELLS without reaching into executor workers)
-    block = max(1, DENSE_BLOCK_CELLS // max(1, len(q_ids)))
-
-    def block_argmax(batches):
-        chunks = list(batches)  # Arrow batches can split one id's terms
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        if len(pdf) == 0:
-            return
-        pdf = pdf[pdf["term"].isin(t_idx)]
-        if len(pdf) == 0:
-            return
-        # id-sorted rows => np.argmax picks the smallest match_id among ties
-        a_ids = np.asarray(sorted(pdf[match_id].unique()))
-        a_pos = {a: i for i, a in enumerate(a_ids)}
-        A = np.zeros((len(a_ids), len(terms)), dtype=np.float64)
-        A[
-            pdf[match_id].map(a_pos).to_numpy(),
-            pdf["term"].map(t_idx).to_numpy(),
-        ] = pdf["weight"].to_numpy()
-        # Blocked matmul: bound the (rows x |Q|) score allocation to
-        # DENSE_BLOCK_CELLS regardless of how many candidate rows landed
-        # in this partition (see the constant's comment — input-byte
-        # partition sizing cannot see the x|Q| expansion). Chunks walk
-        # a_ids ASCENDING, and the cross-chunk merge replaces only on a
-        # STRICTLY greater score, so ties keep the earlier (smaller) id —
-        # the same (round, then ascending-id) contract as the one-shot
-        # argmax.
-        best_ids = best_scores = None
-        for s in range(0, len(a_ids), block):
-            Ab = A[s : s + block]
-            R = Ab @ T.T  # raw dot products (block_rows, n_queries)
-            S = np.round(R, round_to)
-            # Sparse-path parity: a candidate is in play iff it SHARES a
-            # term (raw dot > 0 under non-negative weights) — even when
-            # the cosine ROUNDS to 0.0. Rounded 0 and true 0 collide in
-            # S, so mask true zeros out before the argmax instead of
-            # filtering rounded scores.
-            S[R == 0.0] = -np.inf
-            best = S.argmax(axis=0)
-            scores = S[best, np.arange(S.shape[1])]
-            ids_blk = a_ids[s : s + block][best]
-            if best_scores is None:
-                best_scores, best_ids = scores, ids_blk
-            else:
-                upd = scores > best_scores
-                best_scores = np.where(upd, scores, best_scores)
-                best_ids = np.where(upd, ids_blk, best_ids)
-        keep = np.isfinite(best_scores)
-        yield pd.DataFrame(
-            {
-                query_id: np.asarray(q_ids)[keep],
-                match_id: best_ids[keep],
-                "cosine": best_scores[keep],
-            }
-        )
-
-    candidates = (
-        abstract_vec.repartition(match_id)
-        .mapInPandas(block_argmax, schema=out_schema)
-    )
-    # merge partition-local winners: tiny (<= n_partitions rows per query)
-    return best_match(candidates, query_id, match_id)
 
 
 def dense_topk_neighbors(
@@ -349,7 +186,7 @@ def dense_topk_neighbors(
     prefetched_queries: list | None = None,
 ) -> DataFrame:
     """Exact cosine top-k via blocked dense matmul — the bounded-query-set
-    strategy for brute-force ANN (top-K sibling of ``dense_best_match``).
+    strategy for brute-force ANN.
 
     ``prefetched_queries``: already-collected query rows (the auto-strategy
     probe collects them to measure |Q|·d — reuse them instead of a second
@@ -387,7 +224,7 @@ def dense_topk_neighbors(
     qn = np.linalg.norm(Q, axis=1)
 
     out_schema = f"{query_id} long, neighbor_id long, cosine double"
-    # Per-task score-block bound (r12, same hazard as dense_best_match):
+    # Per-task score-block bound (r12, see DENSE_BLOCK_CELLS):
     # S is (corpus_rows x |Q|) doubles and the caller's broadcast bound
     # caps |Q|·d, NOT rows x |Q| — a fat corpus partition times a large
     # query pool expands far beyond its input bytes. Chunking the corpus
@@ -439,7 +276,7 @@ def dense_topk_neighbors(
 
     # project to (id, vec) BEFORE the Python boundary: mapInPandas input is
     # not pruned by Catalyst, so an unprojected corpus would ship every
-    # column through Arrow (seen as `label` riding along in PLANS.md)
+    # column through Arrow (e.g. the embeddings table's `label`)
     candidates = corpus.select(id_col, vec_col).mapInPandas(
         block_topk, schema=out_schema
     )

@@ -1003,14 +1003,6 @@ def abc_revenue_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
                               THEN 1.0 ELSE 0.0 END), 6) AS frac_over_60s
         FROM seen GROUP BY event_type
     """,
-    # displaced from the bench headline set in r9 (r8 verdict item 2:
-    # the DRIVER bench artifact must come back under 16 s, and the driver
-    # runs bench minutes after the round's replica-sweep JVMs exit — the
-    # documented +20-30% busy-host signature needs real margin, not an
-    # explanation). This was the cheapest headliner whose family keeps a
-    # bench representative: streaming/event analytics stays timed via
-    # stream_twin_sliding_counts, and the bucketed-running-max spine this
-    # query rides stays pinned by plan tests + the SCALE.md 1×/2×/8× rows.
     doc="[ext] watermark-tuning profile: per event-type lateness of each "
     "event behind the maximum event time already seen in ARRIVAL order "
     "(event_id) — p50/p95/max and the fraction later than 60 s. This is "
@@ -1077,7 +1069,6 @@ def event_lateness_watermark_profile(spark: SparkSession, sf_dir: str) -> DataFr
                round(sum(value), 4) AS total_value
         FROM slots GROUP BY 1, 2
     """,
-    headline=True,
     doc="[ext] STRUCTURED STREAMING twin, driver-visible (r5 verdict item "
     "6): the same hopping-window aggregation as the batch "
     "sliding_window_event_counts, but executed through the actual stream "

@@ -129,7 +129,6 @@ def _ivf_assign(emb: DataFrame, mod: int | None = None) -> DataFrame:
         )
         SELECT query_id, neighbor_id, cosine, rnk FROM ranked WHERE rnk <= {TOP_K}
     """,
-    headline=True,
     doc="[ext] exact ANN baseline: brute-force cosine top-k per query "
     "(broadcast queries × corpus, double fold, deterministic rank).",
 )
@@ -1164,7 +1163,7 @@ def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the participating vectors — instead of staying a fixture
     constant: with FIXED cells the per-cell all-pairs stage is quadratic
     in corpus growth (measured 15.7x wall-time at an 8x data replica,
-    the one super-linear headliner in the SCALE.md scaling table), while
+    the one super-linear query in the SCALE.md scaling table), while
     sqrt-scaled cells balance the n*cells assignment stage against the
     n*(n/cells) pair stage, the classic IVF nlist rule (shared helper
     _ivf_assign — which also keeps the arg-max window NARROW; the oracle
@@ -1204,7 +1203,6 @@ def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "knn_graph_edges",
-    headline=True,
     oracle="WITH " + _KNN_EDGES_CTES + "\n    SELECT src_id, dst_id, cosine, rnk FROM edges",
     doc=f"[ext] kNN-graph construction: every participating vector's top-"
     f"{KNN_GRAPH_K} neighbors within its IVF cell — the edge list that "
@@ -2066,11 +2064,6 @@ MMR_K = 5  # diverse picks per query
     )
     SELECT query_id, rnk, vec_id, rel FROM sel
     """,
-    # Not a headliner: the K greedy rounds are K driver-visible jobs
-    # (~0.4 s each at sf0.1 — 5.2 s total, measured r8), which would blow
-    # the <=16 s displace-don't-accumulate budget; the r7-family headline
-    # slot went to the map-only pii_redacted_rewrite instead (verdict
-    # item 4 offered either).
     doc="[ext] MMR diverse top-k (Carbonell & Goldstein 1998): relevance "
     f"pool of {MMR_POOL} per query, then {MMR_K} picks maximizing "
     "0.7*rel - 0.3*max-similarity-to-already-picked — the rerank that "

@@ -280,7 +280,6 @@ def source_cap_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
                  - n_tokens) // {PACK_BUDGET} AS BIGINT) AS batch_id
     FROM chunks
     """,
-    headline=True,
     doc="[ext] the WHOLE curation last mile as ONE declarative plan: "
     "exact-dedup survivors -> quality gate (length + uniqueness) -> "
     "eval-set decontamination -> stride chunking -> per-language "

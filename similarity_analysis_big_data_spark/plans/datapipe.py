@@ -120,7 +120,6 @@ def mixture_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
                     AS BIGINT) AS is_current
         FROM changes
     """,
-    headline=True,
     doc="[ext] CDC -> SCD2: compress each user's event stream into "
     "type-2 validity intervals (consecutive same-state events collapse; "
     "valid_to = next change, NULL while current) — the dimension-build "
@@ -318,7 +317,6 @@ def embedding_covariance_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pca_project_embeddings",
-    headline=True,
     # No DuckDB oracle: the eigendecomposition has no ANSI-SQL form. The
     # covariance input is oracle-checked (embedding_covariance_cells), and
     # tests/test_operators.py pins orthonormality, explained-variance
@@ -404,11 +402,6 @@ def pca_fixed_basis_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
                row_number() OVER (ORDER BY n_chars, doc_id) - 1 AS new_id
         FROM documents
     """,
-    # displaced from the bench headline set in r6: the bucketed-rank
-    # family's bench representative is event_lateness_watermark_profile
-    # (same operator spine, and the one the r5 verdict directed); this
-    # 3-job reindex is overhead-dominated at toy scale (93x a 6 ms
-    # oracle) while its scale-right plan stays pinned by plan tests
     doc="[ext] dense sequential ids 0..n-1 in (n_chars, doc_id) order "
     "WITHOUT the single-partition global window: exact-percentile "
     "bucketing + per-bucket offsets + one shuffle (operators/reindex.py) — "

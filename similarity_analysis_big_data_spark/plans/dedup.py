@@ -134,7 +134,6 @@ def dedup_canonical_tokenset(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM banded a JOIN banded b ON a.band = b.band AND a.key = b.key
     WHERE a.doc_id < b.doc_id
     """,
-    headline=True,
     doc="[ext] MinHash-LSH near-dup candidates: 12 universal-hash mins, 4 bands × 3 "
     "rows, bucket self-join — the O(n²)-free dedup scale path.",
 )
@@ -1078,7 +1077,6 @@ def doc_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE d.doc_id % {mod} = 0
       AND d.doc_id NOT IN (SELECT id FROM losers)
     """.replace("{mod}", str(SAMPLE_MOD))).replace("WITH toks", "WITH RECURSIVE toks", 1),
-    headline=True,
     doc="[ext] SURVEY §7 step 6 end to end: MinHash-LSH candidates -> exact-Jaccard "
     "verify -> connected components -> anti-join survivors. Oracle uses a WITH "
     "RECURSIVE transitive closure; the engine runs distributed min-label propagation.",

@@ -626,7 +626,6 @@ UNK_ID = -1
 
 @register(
     "tokenize_corpus_to_ids",
-    headline=True,
     oracle=_SQL_TERMS.replace(
         "terms AS (\n    SELECT doc_id, unnest(tokens) AS term FROM toks\n)",
         """terms AS (

@@ -141,7 +141,6 @@ def pii_detection_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pii_redacted_rewrite",
-    headline=True,  # r8: displaced q5_region_volume so the bench tracks the r7 PII family
     oracle=_SQL_BLOBS
     + f"""
     SELECT doc_id,

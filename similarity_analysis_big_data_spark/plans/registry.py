@@ -27,7 +27,6 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class QuerySpec:
     fn: QueryFn
     oracle: str | None = None  # DuckDB SQL over the pre-registered views
-    headline: bool = False  # included in bench.py's timed set
     doc: str = ""
 
 
@@ -37,7 +36,6 @@ QUERIES: dict[str, QuerySpec] = {}
 def register(
     name: str,
     oracle: str | None = None,
-    headline: bool = False,
     doc: str = "",
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: add a query to the registry."""
@@ -45,105 +43,22 @@ def register(
     def wrap(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name {name!r}")
-        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, headline=headline, doc=doc or (fn.__doc__ or ""))
+        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""))
         return fn
 
     return wrap
 
 
-# Names surfaced FIRST in query_map()/oracle_sql_map(). The round driver
-# samples ~50 registry entries per round in presentation order; the
-# r1∪…∪r12 union has driver-checked ALL 287 registered queries at least
-# once with zero hash failures ever, so round-13 ordering is pure
-# freshness rotation (continuing the r11/r12 policy, per the r12
-# verdict's item 7): (1) all 44 queries whose latest driver row dates
-# from r7 — the oldest rows anywhere after the r12 window retired the
-# r5/r6 cohorts; (2) the two rows-only queries (`pca_project_embeddings`,
-# `ann_pq_trained_recall_at_k` — `err: no_oracle` by design) kept
-# adjacent to their hash-checked twins (`pca_fixed_basis_projection`,
-# `embedding_covariance_cells`) so the rows-only pairing stays visibly
-# current; (3) the alphabetically first r8-latest rows to fill the
-# ~50-row window. After r13 no latest row predates r8. (Pure
-# presentation order — every query is in the map either way.)
-PRIORITY: tuple[str, ...] = (
-    # -- latest driver row r7: the oldest of the ledger --
-    "approx_distinct_parts",
-    "attribution_decay_revenue",
-    "bpe_train_apply_unrolled",
-    "countmin_heavy_ngrams",
-    "dsir_importance_weights",
-    "dup_rate_by_source",
-    "event_lateness_watermark_profile",
-    "facility_location_selection",
-    "feature_hashed_tf",
-    "gdpr_erasure_cascade",
-    "geometric_mean_by_type",
-    "gopher_repetition_metrics",
-    "hll_sketch_merge_users",
-    "incremental_near_dup_delta",
-    "kcenter_coreset_sample",
-    "langid_confidence_margin",
-    "langid_confusion_matrix",
-    "lsh_recall_by_jaccard_band",
-    "mmr_diverse_topk",
-    "near_dup_best_quality_survivors",
-    "pii_detection_stats",
-    "pii_multitype_risk",
-    "pii_redacted_rewrite",
-    "price_drift_psi",
-    "q11_important_parts",
-    "q12_late_lines_by_status",
-    "q15_top_revenue_supplier",
-    "q16_supplier_variety",
-    "q19_disjunctive_join_revenue",
-    "q20_dominant_part_suppliers",
-    "q9_product_profit",
-    "readability_scores",
-    "split_leakage_pairs",
-    "stream_twin_interval_join",
-    "stream_twin_session_windows",
-    "stream_twin_sliding_counts",
-    "stream_twin_stateful_totals",
-    "target_encode_priority_loo",
-    "top_trigrams_per_lang",
-    "train_corpus_leakage_purged",
-    "trigram_backoff_scores",
-    "user_event_chisq_anomaly",
-    "vocab_richness_by_source",
-    "zscore_doclen_by_lang",
-    # -- rows-only queries + their hash-checked twins (r11 verdict item 6) --
-    "pca_project_embeddings",
-    "ann_pq_trained_recall_at_k",
-    "pca_fixed_basis_projection",
-    "embedding_covariance_cells",
-    # -- latest driver row r8, alphabetical: fill the window --
-    "ann_bruteforce_topk",
-    "ann_hyperplane_lsh_buckets",
-)
-
-
-def _ordered() -> dict[str, QuerySpec]:
-    lead = [n for n in PRIORITY if n in QUERIES]
-    rest = [n for n in QUERIES if n not in PRIORITY]
-    return {n: QUERIES[n] for n in [*lead, *rest]}
-
-
 def query_map() -> dict[str, QueryFn]:
     """The ``queries()`` payload for ``__spark_entry__``."""
     _load_all()
-    return {name: spec.fn for name, spec in _ordered().items()}
+    return {name: spec.fn for name, spec in QUERIES.items()}
 
 
 def oracle_sql_map() -> dict[str, str]:
     """The ``oracle_sql()`` payload for ``__spark_entry__``."""
     _load_all()
-    return {name: spec.oracle for name, spec in _ordered().items() if spec.oracle is not None}
-
-
-def headline_queries() -> dict[str, QueryFn]:
-    """The subset bench.py times at sf0.1."""
-    _load_all()
-    return {name: spec.fn for name, spec in QUERIES.items() if spec.headline}
+    return {name: spec.oracle for name, spec in QUERIES.items() if spec.oracle is not None}
 
 
 _LOADED = False

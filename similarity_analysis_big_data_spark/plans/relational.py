@@ -65,9 +65,6 @@ def global_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE l_shipdate <= TIMESTAMP '{_Q1_CUTOFF} 00:00:00'
         GROUP BY l_returnflag, l_linestatus
     """,
-    # displaced from the bench headline set in r6 (q3/q5 keep the TPC-H
-    # join-agg representatives; the total stays within the <=16 s budget
-    # as stream twins rotate in) — still driver-sampled and oracle-checked
     doc="A2/A6 analogue at TPC-H Q1 shape: filtered multi-agg groupBy.",
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -263,7 +260,6 @@ def cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         ORDER BY revenue DESC, o_orderkey
         LIMIT 10
     """,
-    headline=True,
     doc="J1 inner equi-join chain (lab2.py:173 analogue) + grouped top-N (TPC-H Q3 shape).",
 )
 def q3_unshipped_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -311,9 +307,6 @@ def q3_unshipped_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE r_name = 'ASIA' AND s_nationkey = c_nationkey
         GROUP BY n_name
     """,
-    # headline until r8: displaced for pii_redacted_rewrite (r7 verdict item 4;
-    # mmr_diverse_topk blew the ≤16 s budget — see plans/ann.py) — q5 is
-    # sub-0.5 s and its join shape is covered by q3 + the broadcast-join plan tests.
     doc="J1 multi-way join (TPC-H Q5 shape): fact ⋈ 5 dims with a same-nation theta condition.",
 )
 def q5_region_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -420,10 +413,6 @@ def anti_join_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
           ON p.user_id = c.user_id AND p.ts >= c.ts
     """,
-    # headline r2-r5; displaced r6 by stream_twin_sliding_counts (the bench
-    # set displaces, not accumulates — r5 verdict item 7); still
-    # oracle-checked every round via test_oracle_parity + the driver sample
-    headline=False,
     doc="[ext] §2.3: as-of join — last click at-or-before each purchase, per user.",
 )
 def asof_join_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -708,8 +697,7 @@ def json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM events GROUP BY 1, 2
     """,
     doc="[ext] §2.8/§2.5: tumbling time-bucket aggregation (batch twin of the "
-    "streaming windowed agg in streaming/events.py). Rotated out of the "
-    "headline set r5 (displaced by event_lateness_watermark_profile).",
+    "streaming windowed agg in streaming/events.py).",
 )
 def hourly_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")

@@ -15,16 +15,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..functions.text import tokenize
 from ..functions.tfidf import doc_frequency, l2_normalize, term_frequency, tfidf
 from ..operators.similarity import (
-    DENSE_MAX_BROADCAST_CELLS,
-    DENSE_MAX_VOCAB,
     all_pairs_cosine_exact,
     best_match,
-    dense_best_match,
     pivot_matrix,
     sparse_cosine_join,
 )
@@ -34,46 +30,6 @@ from .registry import register
 TITLE_TOKENS = 6  # leading tokens of text used as the synthetic "title"
 TITLE_SAMPLE_MOD = 5  # sample 1-in-5 docs as retrieval queries
 LANGS = ["de", "en", "es", "fr", "zh"]  # stable across all fixture SFs
-
-# Auto-strategy memo for title_best_abstract, keyed (applicationId,
-# sf_dir): "sparse" = proven sparse (skip every probe action), and
-# "full-probe" = the sample could not decide, run the full probe. Plan
-# statistics, not data — staleness can only change WHICH physical
-# strategy runs, never the result (extensional equality of the two paths
-# is property-tested). Bounded (ADVICE r10): inserts evict entries from
-# other applicationIds (dead sessions can never read theirs back) and
-# the per-app population is capped FIFO, so a long-lived driver sweeping
-# many replica dirs cannot grow it without bound. Concurrent first calls
-# race benignly — both run the same deterministic pre-probe, last write
-# wins with the identical verdict.
-_AUTO_STRATEGY_CACHE: dict[tuple[str, str], str | tuple] = {}
-_AUTO_STRATEGY_CACHE_MAX = 64  # dirs per app; far above any real sweep
-
-# Memo-dense persist rule: ALWAYS persist. Calibration history, because
-# this rule flipped twice as host artifacts were root-caused out of the
-# measurements: (r7-r11) "persist only above 16k docs" — calibrated while
-# THP huge-page compaction taxed the cache's serialized block writes;
-# (r12, post-allocator-fix) "persist only below a 24k ceiling" — the 40k
-# persist arm read an unstable 13-33 s, which looked like heap-capacity
-# competition but was actually the heap-EXPANSION pre-touch stall (cache
-# block writes grow the heap; each growth step ran a multi-second G1
-# pause). With the heap pre-sized (-Xms == -Xmx, the second r12 fix) the
-# A/B is stable and persist WINS at every measured point — min-of-3,
-# fresh process per arm, two arms each: 5k: 2.59 on / 4.29 off; 10k:
-# 3.04/3.33; 20k: 4.03/4.82; 40k: 5.80-6.24 / 7.17-7.97; 80k:
-# 9.05-11.02 / 10.56-11.35. The TF relation is reread by the title
-# collect and the final action; recomputing the fused tokenize+agg chain
-# always costs more than the cache barrier once allocation is healthy.
-
-
-def _auto_strategy_memo_put(key: tuple[str, str], verdict: str | tuple) -> None:
-    app_id = key[0]
-    for k in [k for k in _AUTO_STRATEGY_CACHE if k[0] != app_id]:
-        del _AUTO_STRATEGY_CACHE[k]
-    while len(_AUTO_STRATEGY_CACHE) >= _AUTO_STRATEGY_CACHE_MAX:
-        del _AUTO_STRATEGY_CACHE[next(iter(_AUTO_STRATEGY_CACHE))]
-    _AUTO_STRATEGY_CACHE[key] = verdict
-
 
 # Shared DuckDB CTE prefix: long-format terms + TF + DF + corpus size.
 _SQL_TERMS = r"""
@@ -190,7 +146,6 @@ def doc_frequency_by_term(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(w / sqrt(sum(w * w) OVER (PARTITION BY doc_id)), 6) AS weight
     FROM w
     """,
-    headline=True,
     doc="M3+A8 (lab2.py:187-194): sklearn-smooth TF-IDF, L2-normalized per doc — "
     "exact formula parity with the reference (log10, +1 placements).",
 )
@@ -204,7 +159,7 @@ def doc_tfidf_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The TF relation feeds two consumers (the DF aggregate's broadcast
     build side and the weighting probe side) UNCACHED — same finding as
-    the title sparse branch (which see): routing the probe through a
+    title_best_abstract (which see): routing the probe through a
     TableCacheQueryStage barrier (serialized block write + read) loses to
     recomputing the tokenize+agg chain fused into each consumer's stage.
     Measured min-of-3 warm, persist vs no-persist: 1.95 s vs 1.10 s at
@@ -213,9 +168,8 @@ def doc_tfidf_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combine collapses to vocabulary size before its shuffle,
     while the cache barrier pays full TF-relation serialization.
     RE-CONFIRMED post-allocator-fix (r12 — this path is all-JVM, so the
-    THP tax that reversed the memo-dense persist rule never applied
-    here): 1.59 vs 1.09 at sf0.1, 4.43 vs 3.45 at 8x, interleaved A/B +
-    fresh-process confirm."""
+    host's THP allocation tax never applied here): 1.59 vs 1.09 at sf0.1,
+    4.43 vs 3.45 at 8x, interleaved A/B + fresh-process confirm."""
     docs = load_table(spark, sf_dir, "documents")
     corpus_n = docs.agg(F.count("*").alias("_n_docs"))
     tf = term_frequency(_doc_terms(spark, sf_dir), ["doc_id"])
@@ -229,169 +183,30 @@ def doc_tfidf_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     "title_best_abstract",
     oracle=_SQL_TITLE_PIPELINE
     + "SELECT title_id, best_abstract_id, round(cosine, 6) AS cosine FROM best",
-    headline=True,
     doc="Task 1 flagship (lab2.py:150-251): per-title best-matching abstract via "
     "sparse cosine join + deterministic arg-max; zero-overlap titles emit (-1, 0.0).",
 )
-def title_best_abstract(
-    spark: SparkSession, sf_dir: str, strategy: str = "auto"
-) -> DataFrame:
+def title_best_abstract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's cartesian+dict-dot-product, reformulated: pairs that
     share no term never materialize; arg-max is a ranked window with an
     abstract_id tiebreak (the reference is partition-order nondeterministic).
 
-    The abstract-side TF relation feeds three consumers (the DF aggregate —
-    whose broadcast the title path reuses — and the abstract weighting), and
-    each would otherwise re-run the corpus tokenize+explode+agg from the
-    parquet scan (the reference re-evaluates its whole lineage per action
-    too, having no cache() anywhere — SURVEY §4.1). The probe and dense
-    paths PERSIST that relation unconditionally (r12: the post-heap-fix
-    A/B shows the MEMORY_AND_DISK barrier beating the double fused scan
-    at every measured corpus size, 5k-80k docs — the earlier
-    size-conditional rules were calibrated on persist arms taxed by the
-    two since-fixed host allocation stalls; history at the top of this
-    module); the SPARSE path creates no persists at all — its one
-    streaming pair-join pass beats the cache barrier (SCALE.md r7), and
-    its single corpus-scan cost at 100 TB comes from the fused chain.
-
-    ``strategy`` picks the pair-stage physical plan, AQE-style (measure,
-    then choose):
-
-    - ``"sparse"`` — the term-join formulation (the 100 TB default: pairs
-      sharing no term never materialize, and real vocabularies are huge);
-    - ``"dense"`` — broadcast-matmul arg-max
-      (operators.similarity.dense_best_match): when the vocabulary is
-      narrow every pair DOES share terms, the sparse join degenerates to
-      |titles|x|abstracts| shuffled rows, and a blocked BLAS matmul that
-      never materializes pairs wins by a wide margin;
-    - ``"auto"`` — a cheap sample pre-probe first (a 512-doc distinct-term
-      count is a vocabulary LOWER bound, so exceeding the dense ceiling
-      proves sparse from one tiny job; verdict memoized per (session,
-      dir)), then, only if undecided, the full probe over the DF relation.
-      Both paths share the identical round-before-argmax / ascending-id
-      tiebreak contract, so the result — and the oracle — is the same.
+    Lazy and cache-free: building the query starts no Spark job and
+    creates no persist. The abstract-side TF relation feeds the
+    DF aggregate (whose broadcast the title path reuses) and the abstract
+    weighting; both consumers recompute the fused tokenize+agg chain, which
+    beats routing the pair join's build side through a cache barrier
+    (40.7 s through the cache vs 22.0 s fused at the 16x replica, SCALE.md
+    r7). The corpus size for the IDF is a cross-joined 1-row aggregate, so
+    no count() runs before the caller's action.
     """
     docs = load_table(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    n_lit: int | None = None  # driver-known corpus size (memo-dense path)
-    memo_dense: tuple | None = None  # provisionally accepted dense memo
-
-    if strategy == "auto":
-        # Cheap pre-probe (r10): the distinct-term count of ANY document
-        # subset is a LOWER BOUND on the vocabulary, so if a fixed-size
-        # sample already exceeds DENSE_MAX_VOCAB the dense precondition is
-        # provably broken and the decision is sparse — from one tiny job
-        # (512 docs tokenized), without materializing the full TF/DF
-        # persists the full probe needs. Real corpora blow past 256
-        # distinct terms within a handful of documents, so the expensive
-        # full probe below only ever runs for genuinely narrow-vocabulary
-        # inputs, where it is cheap anyway.
-        #
-        # The verdict is MEMOIZED per (session, sf_dir), like the planner
-        # statistics it is: repeat calls skip the sample job (and, once
-        # resolved, every probe action). Staleness is correctness-neutral
-        # by construction — both strategies share the identical
-        # round-before-argmax / tiebreak contract, so even a wrong
-        # strategy choice cannot change the RESULT. A memoized DENSE
-        # verdict (r11) carries the corpus size the full probe measured
-        # and is re-validated on reuse by a count FOLDED into the title
-        # collect (r13 — one driver action for both): an unchanged row
-        # count accepts the verdict and takes the direct dense path (no
-        # probe aggregates, the corpus size as a plan literal instead of
-        # a cross-joined 1-row aggregate); a changed count re-decides
-        # from scratch and re-memoizes. The residual same-count-rewrite
-        # hazard (a mid-session rewrite of the SAME dir to the SAME row
-        # count with a radically wider vocabulary — ADVICE r11) is closed
-        # one layer down: dense_best_match measures the ACTUAL collected
-        # matrix against the broadcast bounds and degrades to the exact
-        # sparse formulation if they are violated, so a stale memo can
-        # cost a wasted collect but never an over-broadcast. The memo
-        # also carries the probe-time vocab, cross-checked here against
-        # the current bound (guards constant drift across code changes).
-        cached = _AUTO_STRATEGY_CACHE.get(key)
-        if cached == "sparse":
-            strategy = "sparse"
-        elif isinstance(cached, tuple) and cached[0] == "dense":
-            if cached[2] <= DENSE_MAX_VOCAB:
-                # Accept the memo PROVISIONALLY: the row-count revalidation
-                # is folded into the title-matrix collect below (r13 — one
-                # driver action instead of a separate count() job + the
-                # collect inside dense_best_match; the memoized path now
-                # runs 2 actions total including the caller's). A stale
-                # count discards the collected rows and re-decides from
-                # scratch — same hazard cost as the old separate count()
-                # (one wasted cheap job), on a path only a mid-session
-                # data rewrite can reach.
-                memo_dense = cached
-                n_lit = cached[1]
-            # else: vocab bound drifted across code changes — leave
-            # strategy "auto"; the full probe below re-decides from the
-            # data and overwrites the memo
-        elif cached is None:
-            # Deterministic sample (ADVICE r10): a bare limit(512) takes
-            # whichever partitions finish first, so near the vocab
-            # boundary the sparse-vs-full-probe decision flipped run to
-            # run (result-invariant, but plan and timing varied). A
-            # doc_id predicate is stable across runs AND pushdown-
-            # friendly (parquet row-group min/max stats skip the rest of
-            # the table — no full scan, unlike orderBy().limit()). If a
-            # corpus's ids don't start low the filter just yields fewer
-            # rows, which only weakens the lower bound — the full probe
-            # below remains the decider, so correctness is unaffected.
-            v_lb = (
-                docs.filter(F.col("doc_id") < 512)
-                .select(F.explode(tokenize(F.lower("text"))).alias("term"))
-                .agg(F.count_distinct("term").alias("v_lb"))
-                .collect()[0]["v_lb"]
-            )
-            if v_lb > DENSE_MAX_VOCAB:
-                strategy = "sparse"
-                _auto_strategy_memo_put(key, "sparse")
-            else:
-                # a lower bound can never prove dense; remember only that
-                # the full probe is the decider for this corpus
-                _auto_strategy_memo_put(key, "full-probe")
-
-    # Corpus size for the IDF: a driver literal when the memo-dense path
-    # already knows (and re-validated) it — that removes the cross-joined
-    # 1-row broadcast aggregate subtree from every weighting plan — else
-    # ONE 1-row aggregate serving both the IDF and the decision row, so
-    # every cross-join site shares the same canonical subplan.
-    sizes_agg = docs.agg(
-        F.count("*").alias("_n_docs"),
-        F.count_if(F.col("doc_id") % TITLE_SAMPLE_MOD == 0).alias("nt"),
-    )
-    corpus_n: int | DataFrame = n_lit if n_lit is not None else sizes_agg
-
-    # The TF/DF persists only pay when a materialization is REREAD by a
-    # later pass over the same relation: the full auto probe's collect
-    # (reread by the final action), or the memo-dense path's title collect
-    # + final action. A resolved-sparse decision skips them so the pair
-    # join's build chain pipelines uncached (the r7 16x finding: 22.0 s
-    # fused vs 40.7 s through the cache barrier). The memo-dense path
-    # ALWAYS persists: the r12 post-heap-fix A/B (see the calibration
-    # history at the top of this module) shows the cache barrier beating
-    # the double fused scan at every measured corpus size once both host
-    # allocation artifacts were fixed; the two earlier size-conditional
-    # rules were calibrated on stall-taxed persist arms.
-    if strategy in ("auto", "dense"):
-        persist = True  # probe and dense paths: materializations are reread
-    else:
-        persist = False
+    corpus_n = docs.agg(F.count("*").alias("_n_docs"))
     abstract_tf = term_frequency(
         _doc_terms(spark, sf_dir).withColumnRenamed("doc_id", "abstract_id"),
         ["abstract_id"],
     )
-    if persist:
-        abstract_tf = abstract_tf.persist(StorageLevel.MEMORY_AND_DISK)
-    # DF is vocabulary-sized and feeds three consumers (the auto probe's
-    # count, the abstract weighting, the title weighting) — persisting it
-    # makes the probe's materialization pay for the weighting joins
-    # instead of being thrown away
     df_ = doc_frequency(abstract_tf)
-    if persist:
-        df_ = df_.persist(StorageLevel.MEMORY_AND_DISK)
-
     abstract_vec = l2_normalize(
         tfidf(abstract_tf, df_, corpus_n, ["abstract_id"]), ["abstract_id"]
     )
@@ -402,133 +217,15 @@ def title_best_abstract(
     all_titles = docs.filter(F.col("doc_id") % TITLE_SAMPLE_MOD == 0).select(
         F.col("doc_id").alias("title_id")
     )
-
-    t_rows = None
-    if memo_dense is not None:
-        # Folded revalidation (r13): ONE driver action yields the current
-        # corpus count AND the full title matrix. The matrix rows were
-        # weighted with the memoized count as the IDF literal, so they are
-        # valid exactly when the count still matches; on a mismatch the
-        # rows are discarded, the stale memo dropped, the attempt's
-        # persists released, and the call re-decides from scratch (the
-        # recursion re-enters with no memo: cheap pre-probe, then the full
-        # probe — which rebuilds the identical TF/DF plans).
-        tagged_cnt = docs.agg(F.count("*").alias("n_docs")).select(
-            F.lit("cnt").alias("tag"),
-            F.lit(None).cast("long").alias("title_id"),
-            F.lit(None).cast("string").alias("term"),
-            F.lit(None).cast("double").alias("weight"),
-            "n_docs",
-        )
-        tagged_vec = title_vec.select(
-            F.lit("vec").alias("tag"),
-            "title_id",
-            "term",
-            "weight",
-            F.lit(None).cast("long").alias("n_docs"),
-        )
-        rows = tagged_cnt.unionByName(tagged_vec).collect()
-        n_now = next(r for r in rows if r["tag"] == "cnt")["n_docs"]
-        if n_now == memo_dense[1]:
-            strategy = "dense"
-            t_rows = [r for r in rows if r["tag"] == "vec"]
-        else:
-            _AUTO_STRATEGY_CACHE.pop(key, None)
-            abstract_tf.unpersist()
-            df_.unpersist()
-            return title_best_abstract(spark, sf_dir, strategy="auto")
-    if strategy == "auto":
-        # ONE driver action yields the strategy decision AND (when the
-        # decision is dense) the full title matrix (r6 fold of the former
-        # separate dense_best_match collect): the decision row is the
-        # vocab count (vocabulary-sized agg over the persisted TF — this
-        # is also what materializes both persists) cross-joined with the
-        # 1-row corpus sizes aggregate, and the title-matrix rows are
-        # gated plan-side by cross-joining title_vec against the FILTERED
-        # decision row — a sparse decision makes that branch empty, so
-        # the sparse path never pays for a title collect.
-        dec = (
-            df_.agg(F.count("*").alias("vocab"))
-            .crossJoin(sizes_agg)
-            .withColumn(
-                "dense_ok",
-                (F.col("vocab") <= DENSE_MAX_VOCAB)
-                & (F.col("nt") * F.col("vocab") <= DENSE_MAX_BROADCAST_CELLS),
-            )
-        )
-        tagged_dec = dec.select(
-            F.lit("dec").alias("tag"),
-            F.lit(None).cast("long").alias("title_id"),
-            F.lit(None).cast("string").alias("term"),
-            F.lit(None).cast("double").alias("weight"),
-            "dense_ok",
-            "_n_docs",
-            "vocab",
-        )
-        tagged_vec = title_vec.crossJoin(
-            F.broadcast(dec.filter("dense_ok").select(F.lit(1).alias("_g")))
-        ).select(
-            F.lit("vec").alias("tag"),
-            "title_id",
-            "term",
-            "weight",
-            F.lit(None).cast("boolean").alias("dense_ok"),
-            F.lit(None).cast("long").alias("_n_docs"),
-            F.lit(None).cast("long").alias("vocab"),
-        )
-        rows = tagged_dec.unionByName(tagged_vec).collect()
-        dec_row = next(r for r in rows if r["tag"] == "dec")
-        strategy = "dense" if dec_row["dense_ok"] else "sparse"
-        if strategy == "dense":
-            # memoize the verdict WITH the measured corpus size and vocab:
-            # later calls re-validate with one cheap count() (plus a
-            # driver-side vocab-bound cross-check) and take the direct
-            # dense path (no probe aggregates, no tagged collect)
-            _auto_strategy_memo_put(key, ("dense", dec_row["_n_docs"], dec_row["vocab"]))
-        if strategy == "sparse":
-            # upgrade the memo: later calls skip straight to sparse
-            _auto_strategy_memo_put(key, "sparse")
-        if strategy == "dense":
-            t_rows = [r for r in rows if r["tag"] == "vec"]
-
-    if strategy == "dense":
-        top = dense_best_match(
-            title_vec, abstract_vec, "title_id", "abstract_id", t_rows=t_rows
-        )
-        # dense mode's precondition (n_titles * vocab <= broadcast cells)
-        # bounds the match relation, so the null-fill join broadcasts
-        top = all_titles.join(F.broadcast(top), "title_id", "left").select(
-            "title_id",
-            F.col("abstract_id"),
-            F.coalesce(F.col("cosine"), F.lit(0.0)).alias("cosine"),
-        )
-    else:
-        # Sparse branch: DROP the TF/DF persists before building the pair
-        # join. The cache only pays off when a LATER action rereads what
-        # the probe materialized — the dense path's collect does exactly
-        # that — but the sparse pair join is one giant streaming pass, and
-        # routing its build side through a TableCacheQueryStage barrier
-        # (serialized block write + read) instead of recomputing the
-        # corpus chain fused into the join stage measured 40.7 s vs
-        # 22.0 s at the 16x replica (SCALE.md r7 flagship sweep). After
-        # unpersist the planner stops substituting the cached relation
-        # and the whole chain pipelines into the join. UNCONDITIONAL even
-        # when the cheap pre-probe skipped creating the persists: the
-        # cache manager matches by logical plan, so a dense run earlier
-        # in the same session may have left these very relations cached,
-        # and the sparse contract is that its pair join never routes
-        # through a cache barrier.
-        abstract_tf.unpersist()
-        df_.unpersist()
-        pairs = sparse_cosine_join(
-            title_vec,
-            abstract_vec,
-            "title_id",
-            "abstract_id",
-            round_to=9,
-            spread_left=True,
-        )
-        top = best_match(pairs, "title_id", "abstract_id", all_queries=all_titles)
+    pairs = sparse_cosine_join(
+        title_vec,
+        abstract_vec,
+        "title_id",
+        "abstract_id",
+        round_to=9,
+        spread_left=True,
+    )
+    top = best_match(pairs, "title_id", "abstract_id", all_queries=all_titles)
     return top.select(
         "title_id",
         F.coalesce("abstract_id", F.lit(-1)).alias("best_abstract_id"),

@@ -134,9 +134,6 @@ _QUALITY_FEATURES_SELECT = f"""
 @register(
     "text_quality_scores",
     oracle=_SQL_TOKS + _QUALITY_FEATURES_SELECT,
-    # displaced from the bench headline set in r6: the same quality
-    # features run inside the corpus_curation_pipeline headliner, so the
-    # bench budget goes to non-overlapping operator families
     doc="[ext] document quality scoring: token count, mean token length, "
     "uniqueness, stopword ratio, punctuation ratio — the filter features of "
     "an LLM-data quality gate.",

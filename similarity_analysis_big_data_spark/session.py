@@ -15,9 +15,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Sized for the local[32] test harness; on a real cluster these come from
-# spark-submit / cluster config, and callers pass master=None to inherit.
-_DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Sized to this machine's cores (SPARK_GRAFT_CPUS overrides); on a real
+# cluster these come from spark-submit / cluster config, and callers pass
+# master=None to inherit.
+_DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 # numpy madvise(MADV_HUGEPAGE)s every >=4 MB allocation; under this host's
 # THP `defrag=madvise` policy each huge-page FIRST-TOUCH fault then runs
@@ -35,8 +36,8 @@ os.environ.setdefault("NUMPY_MADVISE_HUGEPAGE", "0")
 # Same pathology, second allocator: pyarrow's default (jemalloc) pool also
 # ends up in huge-page-backed mappings on this host, paying the same
 # compaction-stall faults on every Arrow batch buffer. The plain system
-# allocator measured the flagship's memo-dense min 3.09 -> 2.53 s and its
-# cold probe run 19.5 -> 11.9 s on the fragmented host (r12). A healthy
+# allocator measured the flagship's former dense path min 3.09 -> 2.53 s
+# and its cold probe run 19.5 -> 11.9 s on the fragmented host (r12). A healthy
 # cluster deploy may prefer jemalloc back — override by exporting the var.
 os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
 
@@ -127,5 +128,5 @@ def get_session(
 
 
 def get_local_session(app_name: str = "similarity_analysis_big_data_spark") -> SparkSession:
-    """Session pinned to the harness's local[N] layout (tests, bench)."""
+    """Session pinned to the local[N] layout (N = _DEFAULT_CPUS)."""
     return get_session(app_name=app_name, master=f"local[{_DEFAULT_CPUS}]")

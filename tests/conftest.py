@@ -17,7 +17,7 @@ SF_ORACLE = "/root/testdata/sf0.01"
 def spark():
     spark = get_session(
         app_name="sabds-tests",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
+        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS') or os.cpu_count()}]",
     )
     yield spark
 

@@ -117,6 +117,31 @@ def test_with_word_ngrams_matches_column_form(spark):
         assert got == want, (n, got, want)
 
 
+def test_tokenize_emits_no_null_elements(spark):
+    """with_word_ngrams matches word_ngrams only on null-free token arrays
+    (NGram renders a null element as 'null', array_join skips it), so every
+    tokenize output must be free of null elements — including for null,
+    empty, punctuation-only and non-ASCII text."""
+    texts = [None, "", "   ", "?!.,;--", "Naïve café — 東京 日本語", "a  b\tc"]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "id long, t string")
+    rows = df.select(
+        "id",
+        tokenize(F.lower("t")).alias("toks"),
+        F.exists(tokenize(F.lower("t")), lambda x: x.isNull()).alias("has_null"),
+    ).collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        assert not r["has_null"], r
+        assert r["toks"] is None or None not in r["toks"], r
+    # and on those arrays the compiled and Column n-gram forms agree
+    from similarity_analysis_big_data_spark.functions.text import with_word_ngrams
+
+    toks = df.select("id", tokenize(F.lower("t")).alias("toks"))
+    got = {r["id"]: r["g"] for r in with_word_ngrams(toks, "toks", 2, "g").collect()}
+    want = {r["id"]: r["g"] for r in toks.select("id", word_ngrams("toks", 2).alias("g")).collect()}
+    assert got == want
+
+
 def test_rolling_fingerprint_deterministic(spark):
     df = spark.createDataFrame([("abc",), ("abc",), ("abd",)], ["t"])
     vals = [r["fp"] for r in df.select(rolling_fingerprint("t").alias("fp")).collect()]
@@ -275,13 +300,12 @@ def test_udtf_sentence_segments_matches_explode_form(spark):
     }
 
 
-def test_dense_best_match_zero_overlap_and_ties(spark):
-    """dense_best_match edge semantics must mirror the sparse join: a query
-    sharing no term with any candidate yields NO row (caller restores it),
-    and score ties break on the smallest match id."""
+def test_best_match_zero_overlap_and_ties(spark):
+    """The flagship's arg-max contract on the sparse join: a query sharing
+    no term with any candidate yields NO pair row (``all_queries`` restores
+    it as (NULL, 0.0)), and score ties break on the smallest match id."""
     from similarity_analysis_big_data_spark.operators.similarity import (
         best_match,
-        dense_best_match,
         sparse_cosine_join,
     )
 
@@ -294,77 +318,18 @@ def test_dense_best_match_zero_overlap_and_ties(spark):
         [(10, "x", 0.5), (11, "x", 0.5), (12, "y", 1.0)],
         "abstract_id long, term string, weight double",
     )
-    dense = dense_best_match(titles, abstracts, "title_id", "abstract_id").collect()
-    got = {r["title_id"]: (r["abstract_id"], r["cosine"]) for r in dense}
-    assert set(got) == {1}  # t2 dropped (zero overlap)
-    assert got[1] == (10, 0.5)  # tie between 10 and 11 -> smallest id
-    # and the sparse formulation agrees exactly
-    sparse = best_match(
-        sparse_cosine_join(titles, abstracts, "title_id", "abstract_id", round_to=9),
-        "title_id",
-        "abstract_id",
-    ).collect()
-    sgot = {r["title_id"]: (r["abstract_id"], r["cosine"]) for r in sparse}
-    assert sgot == got
-
-
-def test_dense_best_match_overbound_falls_back_to_sparse(spark, monkeypatch):
-    """ADVICE r11 guard: when the ACTUAL collected title matrix violates the
-    broadcast bounds (stale memo / forced-dense caller), dense_best_match
-    must degrade to the exact sparse formulation — same rows — instead of
-    over-broadcasting."""
-    from similarity_analysis_big_data_spark.operators import similarity as ops
-
-    titles = spark.createDataFrame(
-        [(1, "x", 1.0), (2, "zz", 1.0)],
-        "title_id long, term string, weight double",
-    )
-    abstracts = spark.createDataFrame(
-        [(10, "x", 0.5), (11, "x", 0.5), (12, "y", 1.0)],
-        "abstract_id long, term string, weight double",
-    )
-    expected = {
-        r["title_id"]: (r["abstract_id"], r["cosine"])
-        for r in ops.dense_best_match(titles, abstracts, "title_id", "abstract_id").collect()
-    }
-    monkeypatch.setattr(ops, "DENSE_MAX_VOCAB", 0)
+    pairs = sparse_cosine_join(titles, abstracts, "title_id", "abstract_id", round_to=9)
     got = {
         r["title_id"]: (r["abstract_id"], r["cosine"])
-        for r in ops.dense_best_match(titles, abstracts, "title_id", "abstract_id").collect()
+        for r in best_match(pairs, "title_id", "abstract_id").collect()
     }
-    assert got == expected
-
-
-def test_dense_best_match_blocked_equals_one_shot(spark, monkeypatch):
-    """The r12 bounded-memory block loop (DENSE_BLOCK_CELLS caps the
-    (rows x |Q|) score allocation per task) must be invisible in the
-    result: forcing single-row blocks — every cross-chunk merge path,
-    including ties straddling chunk boundaries and zero-overlap masking —
-    yields exactly the one-shot rows."""
-    from similarity_analysis_big_data_spark.operators import similarity as ops
-
-    titles = spark.createDataFrame(
-        # q1: tie between candidates in DIFFERENT chunks (10 and 13);
-        # q2: matched only late in the id order; q3: zero overlap
-        [(1, "x", 1.0), (2, "y", 1.0), (3, "zz", 1.0)],
-        "title_id long, term string, weight double",
-    )
-    abstracts = spark.createDataFrame(
-        [(10, "x", 0.5), (11, "w", 1.0), (12, "y", 0.25),
-         (13, "x", 0.5), (14, "y", 0.75)],
-        "abstract_id long, term string, weight double",
-    )
-
-    def rows(df):
-        return {r["title_id"]: (r["abstract_id"], r["cosine"]) for r in df.collect()}
-
-    one_shot = rows(ops.dense_best_match(titles, abstracts, "title_id", "abstract_id"))
-    monkeypatch.setattr(ops, "DENSE_BLOCK_CELLS", 1)  # 1 cell -> 1-row blocks
-    blocked = rows(ops.dense_best_match(titles, abstracts, "title_id", "abstract_id"))
-    assert blocked == one_shot
-    assert blocked[1] == (10, 0.5)  # cross-chunk tie -> smallest id
-    assert blocked[2] == (14, 0.75)  # later chunk wins on strictly-greater
-    assert 3 not in blocked  # zero overlap stays masked out
+    assert got == {1: (10, 0.5)}  # t2 dropped; tie between 10 and 11 -> 10
+    all_titles = titles.select("title_id").distinct()
+    restored = {
+        r["title_id"]: (r["abstract_id"], r["cosine"])
+        for r in best_match(pairs, "title_id", "abstract_id", all_queries=all_titles).collect()
+    }
+    assert restored == {1: (10, 0.5), 2: (None, 0.0)}
 
 
 def test_pca_matches_driver_numpy(spark):

@@ -8,6 +8,8 @@ path, and the flagship's pair stage not shuffling.
 
 from __future__ import annotations
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -61,13 +63,12 @@ def _plan_of(spark, df) -> str:
 
 
 def test_flagship_pair_stage_does_not_shuffle(spark, sf_oracle):
-    """SPARSE strategy (the 100 TB default): the pair join output must
-    aggregate without an Exchange — the groupBy(title_id, abstract_id)
-    reuses the title window's hash partitioning, and the DF side
-    broadcasts."""
+    """The sparse term-join pair output must aggregate without an
+    Exchange — the groupBy(title_id, abstract_id) reuses the title
+    window's hash partitioning, and the DF side broadcasts."""
     from similarity_analysis_big_data_spark.plans.similarity import title_best_abstract
 
-    plan = _plan_of(spark, title_best_abstract(spark, sf_oracle, strategy="sparse"))
+    plan = _plan_of(spark, title_best_abstract(spark, sf_oracle))
     lines = plan.splitlines()
     # locate the pair aggregation (keys title_id + abstract_id)
     agg_idx = [
@@ -86,26 +87,45 @@ def test_flagship_pair_stage_does_not_shuffle(spark, sf_oracle):
 
 
 def test_flagship_sparse_branch_drops_tf_cache(spark, sf_oracle):
-    """The sparse branch must NOT route its pair-join build side through
-    the probe's TF/DF cache: a persist feeding exactly one streaming pass
-    breaks whole-stage fusion behind a TableCacheQueryStage barrier
-    (measured 40.7 vs 22.0 s at the 16x replica, SCALE.md r7). After auto
-    decides sparse, the final plan must contain no InMemoryRelation."""
+    """The pair join's build side must not route through a TF/DF cache: a
+    persist feeding exactly one streaming pass breaks whole-stage fusion
+    behind a TableCacheQueryStage barrier (measured 40.7 vs 22.0 s at the
+    16x replica, SCALE.md r7). The plan is the term join end to end — no
+    InMemoryRelation and no Python matmul stage."""
     from similarity_analysis_big_data_spark.plans.similarity import title_best_abstract
 
-    # force the auto probe to run AND pick sparse by shrinking the dense
-    # vocabulary ceiling to zero for the duration of the call
-    from similarity_analysis_big_data_spark.plans import similarity as S
-
-    saved = S.DENSE_MAX_VOCAB
-    S.DENSE_MAX_VOCAB = 0
-    try:
-        df = title_best_abstract(spark, sf_oracle, strategy="auto")
-    finally:
-        S.DENSE_MAX_VOCAB = saved
-    plan = _plan_of(spark, df)
+    plan = _plan_of(spark, title_best_abstract(spark, sf_oracle))
     assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
-    spark.catalog.clearCache()
+    assert "MapInPandas" not in plan
+
+
+@pytest.mark.parametrize(
+    "name", ["title_best_abstract", "title_retrieval_accuracy", "mismatch_samples"]
+)
+def test_flagship_build_starts_no_spark_job(spark, sf_oracle, name):
+    """Building the Task 1 queries must stay lazy: no probe, count or
+    collect runs before the caller's action. The build runs under one job
+    group and the caller's action under another; the status store records
+    jobs in submission order, so once the action's jobs are visible any
+    job the build started would be too."""
+    sc = spark.sparkContext
+    build_group, action_group = f"build-{name}", f"action-{name}"
+    try:
+        sc.setJobGroup(build_group, f"build {name}")
+        df = QUERIES[name].fn(spark, sf_oracle)
+        sc.setJobGroup(action_group, f"action {name}")
+        assert df.collect() is not None
+        tracker = sc.statusTracker()
+        for _ in range(100):
+            if tracker.getJobIdsForGroup(action_group):
+                break
+            time.sleep(0.1)
+        assert tracker.getJobIdsForGroup(action_group), "action ran no visible job"
+        assert tracker.getJobIdsForGroup(build_group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
 
 
 def test_topn_uses_take_ordered(spark, sf_oracle):
@@ -328,75 +348,6 @@ def test_pagerank_rank_table_broadcasts(spark, sf_oracle):
     assert "CartesianProduct" not in plan
     # per-iteration rank joins broadcast (3 iterations -> >= 3 BHJ on ranks)
     assert plan.count("BroadcastHashJoin") >= 3
-
-
-def test_flagship_dense_strategy_materializes_no_pairs(spark, sf_oracle):
-    """DENSE strategy: the pair stage is a broadcast matmul inside
-    mapInPandas — no title⋈abstract join operator exists in the plan, and
-    the fixture's 31-term vocabulary makes auto pick it."""
-    from similarity_analysis_big_data_spark.plans.similarity import title_best_abstract
-
-    plan = _plan_of(spark, title_best_abstract(spark, sf_oracle, strategy="dense"))
-    assert "MapInPandas" in plan
-    assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
-    # the merge of partition-local winners is the only window
-    assert "WindowGroupLimit" in plan
-
-
-def test_flagship_dense_matmul_input_is_key_partitioned(spark, sf_oracle):
-    """The block matmul's input must be hash-partitioned on the blocking
-    key (every candidate's terms co-located) — whether that comes from
-    dense_best_match's own repartition or a collapsed-away upstream
-    window exchange is Catalyst's choice (r11 measured: the explicit
-    repartition collapses to a no-op when the l2 window already
-    partitions on the id, and the matmul sees identical partitioning
-    either way). The pin: below MapInPandas there IS an Exchange
-    hashpartitioning on the id, and nothing between them re-shuffles on
-    a different key (which would split a candidate's terms across
-    blocks and corrupt the partition-local argmax)."""
-    from similarity_analysis_big_data_spark.plans.similarity import title_best_abstract
-
-    df = title_best_abstract(spark, sf_oracle, strategy="dense")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    lines = plan.splitlines()
-    idx = next(i for i, line in enumerate(lines) if "MapInPandas" in line)
-    below = lines[idx + 1 :]
-    exchanges = [i for i, line in enumerate(below) if "Exchange" in line]
-    assert exchanges, "no exchange below the matmul at all"
-    first = below[exchanges[0]]
-    assert "hashpartitioning(abstract_id" in first, first
-
-
-def test_flagship_dense_memo_revalidates_and_recovers(spark, sf_oracle):
-    """The memoized DENSE verdict is plan statistics with a staleness
-    guard: a poisoned corpus-size memo (simulating a rewritten dir) must
-    NOT be trusted — the count() revalidation falls back to the full
-    probe, the result is unchanged, and the memo heals to the measured
-    size."""
-    from similarity_analysis_big_data_spark.plans import similarity as S
-
-    key = (spark.sparkContext.applicationId, sf_oracle)
-    S._AUTO_STRATEGY_CACHE.pop(key, None)
-    baseline = {tuple(r) for r in S.title_best_abstract(spark, sf_oracle).collect()}
-    cached = S._AUTO_STRATEGY_CACHE.get(key)
-    assert isinstance(cached, tuple) and cached[0] == "dense"
-    true_n, true_vocab = cached[1], cached[2]
-    assert 0 < true_vocab <= S.DENSE_MAX_VOCAB
-    # memo-validated direct path: same result
-    memo = {tuple(r) for r in S.title_best_abstract(spark, sf_oracle).collect()}
-    assert memo == baseline
-    # poisoned corpus-size memo: revalidation must reject it and re-probe
-    S._AUTO_STRATEGY_CACHE[key] = ("dense", true_n + 1, true_vocab)
-    healed = {tuple(r) for r in S.title_best_abstract(spark, sf_oracle).collect()}
-    assert healed == baseline
-    assert S._AUTO_STRATEGY_CACHE.get(key) == ("dense", true_n, true_vocab)
-    # poisoned vocab memo (ADVICE r11): an over-bound probe-time vocab must
-    # not take the direct dense path — the full probe re-decides and heals
-    S._AUTO_STRATEGY_CACHE[key] = ("dense", true_n, S.DENSE_MAX_VOCAB + 1)
-    healed2 = {tuple(r) for r in S.title_best_abstract(spark, sf_oracle).collect()}
-    assert healed2 == baseline
-    assert S._AUTO_STRATEGY_CACHE.get(key) == ("dense", true_n, true_vocab)
-    spark.catalog.clearCache()
 
 
 def test_ann_dense_strategy_is_map_side(spark, sf_oracle):
@@ -679,7 +630,7 @@ _GLOBAL_TOPN_FIXED = [
 
 
 def test_tokenize_corpus_plan_has_no_window_at_all(spark, sf_oracle):
-    """The headline encode query: the vocab is a driver-materialized
+    """The corpus encode query: the vocab is a driver-materialized
     model artifact (TakeOrderedAndProject + bounded collect), so the
     returned plan must contain NO window of any kind and join the vocab
     back by broadcast."""

@@ -37,7 +37,7 @@ for name in ("hourly_event_rollup", "asof_join_purchase_click",
              "scd2_user_state_history", "asof_join_cogroup",
              "image_near_dup_survivors",  # r8 mapInPandas pHash worker closure
              "video_near_dup_survivors",  # r9 frame sampler + pHash closures
-             "title_best_abstract"):  # dense strategy: mapInPandas + driver numpy
+             "title_best_abstract"):  # flagship sparse term join + arg-max
     df = qs[name](spark, {sf!r})
     pdf = df.toPandas()
     # the harness's rows-only canonicalizer: lexsort on every column

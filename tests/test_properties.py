@@ -226,18 +226,6 @@ def test_mad_outliers_are_extreme(spark):
         assert abs(r["robust_z"]) > 2.0
 
 
-def test_flagship_dense_equals_sparse(spark):
-    """The dense broadcast-matmul strategy is EXTENSIONALLY equal to the
-    sparse-join strategy (same round-before-argmax, same tiebreak, same
-    zero-overlap restoration) on the fixture."""
-    from similarity_analysis_big_data_spark.plans.similarity import title_best_abstract
-
-    sf = "/root/testdata/sf0.001"
-    dense = {tuple(r) for r in title_best_abstract(spark, sf, strategy="dense").collect()}
-    sparse = {tuple(r) for r in title_best_abstract(spark, sf, strategy="sparse").collect()}
-    assert dense == sparse and dense
-
-
 def test_ann_dense_equals_hof(spark):
     """dense_topk_neighbors (BLAS blocked matmul) is extensionally equal to
     the column-expression fold formulation, ranks included."""
